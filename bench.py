@@ -1,19 +1,39 @@
 """Benchmark harness — the tpcds_bench.rs equivalent (SURVEY.md §2A-A21).
 
-Runs the headline queries at $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1)
-on local[$SPARK_GRAFT_CPUS], N iterations each (reference default 3,
-src/bin/tpcds_bench.rs:277-279; we use best-of to factor out JIT/session
-warmup like criterion's sampling does), and prints ONE JSON line:
+Every mode times queries the same way (``timed_runs``): the ORC tables and
+the TPC-DS star schema are materialized first, outside the timed region,
+then each query runs N times to a full collect() (driver-side
+materialization, matching the reference's collect at
+src/bin/tpcds_bench.rs:543-574) under a job group named after the query,
+and every iteration is recorded.
+
+``python bench.py`` — the headline run: the HEADLINE queries at
+$SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) on
+local[$SPARK_GRAFT_CPUS], $BENCH_ITERATIONS each (reference default 3,
+src/bin/tpcds_bench.rs:277-279; best-of absorbs JIT/session warm-up like
+criterion's sampling does). Prints ONE JSON line:
 
     {"metric": "...", "value": <total_sec>, "unit": "sec",
      "queries": {"q": sec, ...}, "sf": ...}
 
-Query timing = full execution to collect() (driver-side materialization,
-matching the reference's collect at src/bin/tpcds_bench.rs:543-574).
+and writes per-iteration detail to bench_detail.json.
+
+``python bench.py Q [Q ...] [--sf-dir DIR]... [--iterations N]
+[-o out.json] [--mem-table] [--no-pushdown] [--partitions N]`` — times the
+named registry queries (``all`` = the whole registry) and writes the
+reference's full JSON result schema (docs/tpcds_benchmark_plan.md:214-236,
+src/bin/tpcds_bench.rs:160-175): run context, per-query iterations with
+elapsed ms and row counts, and failures collected rather than fatal
+(src/bin/tpcds_bench.rs:459-476). With more than one --sf-dir, a table of
+best times and their ratio to the first dir goes to stderr. The knobs
+mirror the reference CLI (src/bin/tpcds_bench.rs:275-300): --partitions →
+shuffle partitions, --mem-table → cached inputs, --no-pushdown →
+spark.sql.orc.filterPushdown=false.
 """
 
 from __future__ import annotations
 
+import argparse
 import glob
 import json
 import os
@@ -21,12 +41,9 @@ import re
 import statistics
 import sys
 import time
+import traceback
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
-
-# best-of-N absorbs codegen warm-up AND the shared-host load spikes observed
-# on this box (same query: 3.6s-90s wall clock under external load)
-ITERATIONS = int(os.environ.get("BENCH_ITERATIONS", "3"))
 
 # --- host-load calibration (judge r07 task 2; r08 task 2) -------------------
 # TWO fixed probes timed at harness start and end, drift = max of the legs:
@@ -206,29 +223,58 @@ HEADLINE = [
 ]
 
 
-def main() -> None:
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    from datafusion_datasource_orc_spark.session import get_spark
-    from datafusion_datasource_orc_spark.operators import QUERIES
-    from datafusion_datasource_orc_spark.sources.tables import orc_dir_for
+def _prepare(spark, sf_dir: str, mem_table: bool) -> None:
+    """Materialize the inputs outside the timed region, as the reference's
+    untimed data-prep step (scripts/convert_tpcds_to_orc.py) does: the ORC
+    tables and all 24 derived TPC-DS tables, so a first query's cold time
+    measures the query, not one-time table writes."""
+    from datafusion_datasource_orc_spark.operators.tpcds import _register_tpcds_views
+    from datafusion_datasource_orc_spark.sources.tables import (
+        TABLES,
+        load_orc_table,
+        load_table,
+        orc_dir_for,
+    )
 
-    spark = get_spark(app_name="bench")
+    for t in ("region", "part", "lineitem", "documents"):
+        orc_dir_for(spark, sf_dir, t)
+    _register_tpcds_views(spark, sf_dir)
+    if mem_table:
+        # MemTable::load parity (src/bin/tpcds_bench.rs:525-536) on BOTH scan
+        # paths: parquet (the operator default) and the materialized-ORC
+        # directories. Spark's cache manager matches by analyzed plan, so a
+        # later read of the same path hits the cached relation.
+        for t in TABLES:
+            load_table(spark, sf_dir, t).cache().count()
+            load_orc_table(spark, sf_dir, t).cache().count()
+
+
+def timed_runs(spark, sf_dir: str, name: str, iterations: int):
+    """Yield (seconds, rows) for each of `iterations` runs of registry query
+    `name`, timed from the DataFrame build to the end of collect(). Every
+    job runs under a job group named after the query, so the status store
+    attributes it to the query."""
+    from datafusion_datasource_orc_spark.operators import QUERIES
+
+    fn = QUERIES[name]
+    sc = spark.sparkContext
+    sc.setJobGroup(name, name)
+    try:
+        for _ in range(iterations):
+            t0 = time.perf_counter()
+            rows = len(fn(spark, sf_dir).collect())
+            yield round(time.perf_counter() - t0, 4), rows
+    finally:
+        sc._jsc.clearJobGroup()
+
+
+def headline(spark, sf_dir: str, n_iter: int) -> None:
+    """The HEADLINE run: one JSON line on stdout, detail in bench_detail.json."""
     # shared identifier stamped into BOTH the stdout JSON line and
     # bench_detail.json: the regression comparator's sidecar backfill
     # requires them equal, so detail from a different (e.g. newer local,
     # uncommitted) run can never masquerade as the committed baseline's
     run_id = f"{int(time.time())}-{os.getpid()}"
-
-    # Pre-materialize ORC tables outside the timed region (the reference's
-    # data-prep step, scripts/convert_tpcds_to_orc.py, is likewise untimed).
-    for t in ("region", "part", "lineitem", "documents"):
-        orc_dir_for(spark, sf_dir, t)
-    # Same for the derived TPC-DS star schema: the reference materializes all
-    # 24 tables before benchmarking, so the first tpcds query's cold time
-    # should measure the query, not the one-time table writes.
-    from datafusion_datasource_orc_spark.operators.tpcds import _register_tpcds_views
-
-    _register_tpcds_views(spark, sf_dir)
 
     cal_start = _calibrate(spark)
     shuf_start = _calibrate_shuffle(spark)
@@ -236,19 +282,14 @@ def main() -> None:
     results: dict[str, float] = {}
     iterations: dict[str, list[float]] = {}
     for name in HEADLINE:
-        fn = QUERIES[name]
-        times: list[float] = []
-        rows = -1
-        for _ in range(ITERATIONS):
-            t0 = time.perf_counter()
-            rows = len(fn(spark, sf_dir).collect())
-            times.append(round(time.perf_counter() - t0, 4))
-        # headline value stays best-of-N (absorbs codegen warm-up), but every
-        # iteration is recorded so host-load spikes are separable from real
-        # regressions when BENCH artifacts are compared across rounds
+        runs = list(timed_runs(spark, sf_dir, name, n_iter))
+        times = [secs for secs, _ in runs]
+        # headline value stays best-of-N (absorbs codegen warm-up and host
+        # load spikes), but every iteration is recorded so load spikes are
+        # separable from real regressions when BENCH artifacts are compared
         results[name] = round(min(times), 3)  # 3dp: stdout-line budget
         iterations[name] = times
-        print(f"# {name}: {min(times):.3f}s rows={rows} iters={times}", file=sys.stderr)
+        print(f"# {name}: {min(times):.3f}s rows={runs[-1][1]} iters={times}", file=sys.stderr)
 
     cal_end = _calibrate(spark)
     shuf_end = _calibrate_shuffle(spark)
@@ -528,7 +569,7 @@ def main() -> None:
         below = [v for v in results.values() if v < cutoff]
         return json.dumps(
             {
-                "metric": "headline_queries_total_best_of_%d" % ITERATIONS,
+                "metric": "headline_queries_total_best_of_%d" % n_iter,
                 "value": round(sum(results.values()), 2),
                 "unit": "sec",
                 "n_queries": len(results),
@@ -577,6 +618,110 @@ def main() -> None:
         "move fields to bench_detail.json"
     )
     print(line)
+
+
+def named(spark, args, names: list[str], sf_dirs: list[str]) -> None:
+    """Time `names` at each of `sf_dirs` into the full JSON result schema."""
+    import pyspark
+
+    results, failures = [], []
+    for sf_dir in sf_dirs:
+        print(f"# sf_dir: {sf_dir}", file=sys.stderr)
+        _prepare(spark, sf_dir, args.mem_table)
+        for name in names:
+            iters = []
+            try:
+                for secs, rows in timed_runs(spark, sf_dir, name, args.iterations):
+                    iters.append({"elapsed_ms": round(secs * 1000, 1), "row_count": rows})
+            except Exception as exc:  # collect failures, keep going (A21)
+                traceback.print_exc()
+                failures.append(
+                    {
+                        "query": name,
+                        "sf_dir": sf_dir,
+                        "iteration": len(iters),
+                        "error": f"{type(exc).__name__}: {exc}",
+                    }
+                )
+            if iters:
+                ms = [it["elapsed_ms"] for it in iters]
+                results.append(
+                    {
+                        "query": name,
+                        "sf_dir": sf_dir,
+                        "iterations": iters,
+                        "avg_ms": round(sum(ms) / len(ms), 1),
+                        "best_ms": min(ms),
+                    }
+                )
+                print(f"# {name}: {min(ms) / 1000:.3f}s rows={rows} iters_ms={ms}", file=sys.stderr)
+
+    best = {(r["sf_dir"], r["query"]): r["best_ms"] / 1000 for r in results}
+    for big in sf_dirs[1:]:
+        base = sf_dirs[0]
+        print(f"\n{'query':28s} {'base_s':>7s} {'big_s':>7s} {'ratio':>6s}  ({base} -> {big})", file=sys.stderr)
+        for name in names:
+            if (base, name) in best and (big, name) in best:
+                b, g = best[base, name], best[big, name]
+                print(f"{name:28s} {b:7.2f} {g:7.2f} {g / b:6.2f}", file=sys.stderr)
+
+    out = {
+        "context": {
+            "num_cpus": os.cpu_count(),
+            "pyspark_version": pyspark.__version__,
+            "python_version": sys.version.split()[0],
+            "args": vars(args),
+        },
+        "queries": results,
+        "failures": failures,
+        "total_avg_ms": round(sum(r["avg_ms"] for r in results), 1),
+    }
+    text = json.dumps(out, indent=2)
+    if args.output:
+        with open(args.output, "w") as f:
+            f.write(text)
+        print(f"wrote {args.output}: {len(results)} runs, {len(failures)} failures, "
+              f"total avg {out['total_avg_ms']} ms")
+    else:
+        print(text)
+    if failures:
+        print(f"FAILURES: {[f['query'] for f in failures]}", file=sys.stderr)
+
+
+def main() -> None:
+    ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
+    ap.add_argument("queries", nargs="*", help="registry names, or 'all'; none = headline run")
+    ap.add_argument("--sf-dir", action="append", help="repeatable; default $SPARK_GRAFT_SF_DIR")
+    ap.add_argument("--iterations", type=int, default=int(os.environ.get("BENCH_ITERATIONS", "3")))
+    ap.add_argument("-o", "--output", default=None)
+    ap.add_argument("--mem-table", action="store_true")
+    ap.add_argument("--no-pushdown", action="store_true")
+    ap.add_argument("--partitions", type=int, default=None)
+    args = ap.parse_args()
+    sf_dirs = args.sf_dir or [os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")]
+
+    from datafusion_datasource_orc_spark.operators import QUERIES
+
+    names = list(QUERIES) if "all" in args.queries else args.queries
+    # checked before Spark starts: a typo after minutes of timed iterations
+    # would discard all the work
+    unknown = [n for n in names if n not in QUERIES]
+    if unknown:
+        ap.error(f"unknown queries: {unknown}")
+    if not names and (args.output or len(sf_dirs) > 1):
+        ap.error("-o and a second --sf-dir need query names")
+
+    from datafusion_datasource_orc_spark.session import get_spark
+
+    spark = get_spark(app_name="bench", shuffle_partitions=args.partitions)
+    if args.no_pushdown:
+        spark.conf.set("spark.sql.orc.filterPushdown", "false")
+        spark.conf.set("spark.sql.parquet.filterPushdown", "false")
+    if names:
+        named(spark, args, names, sf_dirs)
+    else:
+        _prepare(spark, sf_dirs[0], args.mem_table)
+        headline(spark, sf_dirs[0], args.iterations)
 
 
 if __name__ == "__main__":

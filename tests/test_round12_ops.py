@@ -1,6 +1,6 @@
 """Round-12 operator properties: hybrid-BM25 fusion, BPE encode
-train/apply consistency, the triage probe-path widen fix, and the sweep
-re-certification ledger mechanics."""
+train/apply consistency, the triage probe-path widen fix, and the fixed
+0-row certificates."""
 
 from __future__ import annotations
 
@@ -210,152 +210,6 @@ class TestCheckpointedShinglesWiden:
         if half > 1:
             wide = checkpointed_shingles(docs, widen=True)
             assert wide.rdd.getNumPartitions() == half
-
-
-# --------------------------------------------------- sweep re-certification
-class TestSweepRecertLedger:
-    def _build(self, monkeypatch, artifacts, blobs):
-        """Drive tools.stamp_ledger.build() against synthetic artifacts:
-        ``artifacts`` = [(round, kind, rows_dict)], ``blobs`` = {(commit,
-        module) -> sha}. Git access is monkeypatched out so the test pins
-        ONLY the evidence-merge policy."""
-        import json as _json
-
-        import tools.stamp_ledger as sl
-
-        paths = {}
-        for rnd, kind, rows in artifacts:
-            name = ("CORRECTNESS_r%d.json" if kind == 0 else "SWEEP_r%d.json") % rnd
-            paths[name] = rows
-
-        def fake_rounds():
-            out = []
-            for rnd, kind, rows in artifacts:
-                name = (
-                    "CORRECTNESS_r%d.json" if kind == 0 else "SWEEP_r%d.json"
-                ) % rnd
-                out.append((rnd, kind, name))
-            return sorted(out)
-
-        import builtins
-
-        real_open = builtins.open
-
-        def fake_open(path, *a, **kw):
-            import io
-            import os as _os
-
-            base = _os.path.basename(str(path))
-            if base in paths:
-                return io.StringIO(_json.dumps(paths[base]))
-            return real_open(path, *a, **kw)
-
-        monkeypatch.setattr(sl, "artifact_rounds", fake_rounds)
-        monkeypatch.setattr(sl, "introducing_commit", lambda p: "c_" + p)
-        monkeypatch.setattr(
-            sl, "blob_at", lambda commit, rel: blobs.get((commit, rel))
-        )
-        monkeypatch.setattr("builtins.open", fake_open)
-        return sl.build()
-
-    def test_sweep_recertifies_but_never_first_stamps(self, monkeypatch):
-        ok = {
-            "rows_match": True,
-            "schema_match": True,
-            "hash_match": True,
-            "spark_rows": 5,
-            "oracle_rows": 5,
-            "err": None,
-        }
-        artifacts = [
-            (5, 0, {"q_old": ok}),  # driver stamps q_old in round 5
-            # round-12 sweep re-certifies q_old and claims q_new —
-            # q_new has no driver stamp, so the claim must be ignored
-            (12, 1, {"q_old": ok, "q_new": ok}),
-        ]
-        blobs = {
-            ("c_CORRECTNESS_r5.json", "mod_a.py"): "sha_r5",
-            ("c_SWEEP_r12.json", "mod_a.py"): "sha_r12",
-            ("c_SWEEP_r12.json", "mod_b.py"): "sha_new",
-        }
-        import sys
-        import types
-
-        import tools.stamp_ledger as sl
-
-        for modname, path in (("_sw_a", "mod_a.py"), ("_sw_b", "mod_b.py")):
-            m = types.ModuleType(modname)
-            m.__file__ = path
-            monkeypatch.setitem(sys.modules, modname, m)
-
-        def fake_q(modname):
-            def fn(spark, sf_dir):  # pragma: no cover
-                raise NotImplementedError
-
-            fn.__module__ = modname
-            return fn
-
-        monkeypatch.setattr(
-            "datafusion_datasource_orc_spark.operators.QUERIES",
-            {"q_old": fake_q("_sw_a"), "q_new": fake_q("_sw_b")},
-        )
-        monkeypatch.setattr(
-            sl.os.path,
-            "relpath",
-            lambda p, _repo: __import__("os").path.basename(p),
-            raising=True,
-        )
-        records = self._build(monkeypatch, artifacts, blobs)
-        assert "q_new" not in records, "sweep granted a FIRST stamp"
-        assert records["q_old"]["round"] == 12
-        assert records["q_old"]["blob"] == "sha_r12"
-        assert records["q_old"]["evidence"] == "sweep"
-
-    def test_later_driver_stamp_beats_earlier_sweep(self, monkeypatch):
-        ok = {
-            "rows_match": True,
-            "schema_match": True,
-            "hash_match": True,
-            "spark_rows": 5,
-            "oracle_rows": 5,
-            "err": None,
-        }
-        artifacts = [
-            (5, 0, {"q": ok}),
-            (12, 1, {"q": ok}),
-            (13, 0, {"q": ok}),
-        ]
-        blobs = {
-            ("c_CORRECTNESS_r5.json", "m.py"): "s5",
-            ("c_SWEEP_r12.json", "m.py"): "s12",
-            ("c_CORRECTNESS_r13.json", "m.py"): "s13",
-        }
-        import sys
-        import types
-
-        import tools.stamp_ledger as sl
-
-        m = types.ModuleType("_sw_c")
-        m.__file__ = "m.py"
-        monkeypatch.setitem(sys.modules, "_sw_c", m)
-
-        def fn(spark, sf_dir):  # pragma: no cover
-            raise NotImplementedError
-
-        fn.__module__ = "_sw_c"
-        monkeypatch.setattr(
-            "datafusion_datasource_orc_spark.operators.QUERIES", {"q": fn}
-        )
-        monkeypatch.setattr(
-            sl.os.path,
-            "relpath",
-            lambda p, _repo: __import__("os").path.basename(p),
-            raising=True,
-        )
-        records = self._build(monkeypatch, artifacts, blobs)
-        assert records["q"]["round"] == 13
-        assert records["q"]["blob"] == "s13"
-        assert "evidence" not in records["q"]
 
 
 # --------------------------------------------------- fixed 0-row certificates

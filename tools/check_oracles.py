@@ -6,32 +6,23 @@ sorted column names, and an order-insensitive value hash (values normalized:
 floats rounded to 9 significant-ish decimals, timestamps/dates to ISO
 strings, arrays/structs to repr). Exit code 1 on any mismatch.
 
-Usage: python tools/check_oracles.py [--front N] [--rows-out]
-           [--sweep-out PATH] [sf_dir] [query ...]
-  --front N   check only the first N entries of queries() order — the
-              driver's exact gate window (it samples positions 0..N-1).
+Usage: python tools/check_oracles.py [--rows-out] [--sweep-out PATH]
+           [--slowest-first] [--shard I/K] [sf_dir] [query ...]
   --rows-out  merge each checked query's Spark row count into the committed
               sweep_rows.json ledger ({query: {sf: rows}}), keyed by the
               sf_dir basename. tests/test_entry_contract.py reads that
               ledger to assert every registered query is NON-TRIVIAL —
-              returns >0 rows at at least one recorded scale (judge r08
-              task 5: a 0-row hash match is a weak certificate).
+              returns >0 rows at at least one recorded scale (a 0-row hash
+              match is a weak certificate).
   --sweep-out PATH
-              also write the per-query results to PATH in the EXACT
+              also write the per-query results to PATH in the
               CORRECTNESS_r*.json row schema ({name: {rows_match,
               schema_match, hash_match, spark_rows, oracle_rows, err}}),
-              extended (round 13, r12 ADVICE) with per-row integrity and
-              timing fields: "module" (registered module relpath),
-              "module_blob" (git blob sha of the module's on-disk bytes AT
-              RUN TIME — what the sweep actually executed, not whatever is
-              later committed next to it), and "secs" (per-query wall
-              time, the scheduling sidecar for the slow-oracle tail); plus
-              one "__meta__" record carrying full_registry/scope so a
-              partial (--front / named-query / --shard) run can never pose
-              as a full-registry sweep. tools/stamp_ledger.py consumes the
-              recorded blobs as re-certification evidence for queries that
-              already hold a driver hash stamp — first stamps stay
-              driver-only, and only full_registry=true sweeps count.
+              plus "secs" (per-query wall time, the scheduling sidecar for
+              the slow-oracle tail) and one "__meta__" record carrying
+              full_registry/scope, so a partial (named-query / --shard) run
+              can never pose as a full-registry sweep. The committed
+              full-registry SWEEP_r*.json is the correctness record.
   --slowest-first
               order the run by recorded per-query durations (desc) from
               the newest committed SWEEP_r*.json, unknown queries first —
@@ -111,35 +102,6 @@ def _norm_cell(v):
     return str(v)
 
 
-def _module_info() -> dict[str, tuple[str, str | None]]:
-    """query name → (module relpath, run-time git blob sha) for every
-    registered query — recorded into sweep rows so re-certification
-    evidence is tied to the tree that actually RAN (r12 ADVICE: a module
-    edited after the sweep but committed with it must not inherit the
-    sweep's certificate). The blob hash comes from the ONE shared helper
-    (__spark_entry__._git_blob_sha — main() imports the entry module on
-    every run anyway) so sweep-recorded blobs can never drift from the
-    ledger's comparison scheme."""
-    from __spark_entry__ import _git_blob_sha
-
-    from datafusion_datasource_orc_spark.operators import QUERIES
-
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    out: dict[str, tuple[str, str | None]] = {}
-    blob_cache: dict[str, str | None] = {}
-    for name, fn in QUERIES.items():
-        mod = sys.modules.get(fn.__module__)
-        modfile = getattr(mod, "__file__", None)
-        if not modfile:
-            out[name] = ("", None)
-            continue
-        rel = os.path.relpath(os.path.abspath(modfile), repo)
-        if rel not in blob_cache:
-            blob_cache[rel] = _git_blob_sha(modfile)
-        out[name] = (rel, blob_cache[rel])
-    return out
-
-
 def _recorded_secs(sf_key: str | None = None) -> dict[str, float]:
     """Per-query durations for --slowest-first / --shard. Sources, in
     overlay order: the NEWEST committed SWEEP_r*.json that carries secs
@@ -197,12 +159,6 @@ def value_hash(rows, colnames) -> str:
 
 def main() -> int:
     args = sys.argv[1:]
-    front = None  # --front N: check only the first N of queries() order —
-    # exactly the driver's gate window (it samples positions 0..N-1)
-    if "--front" in args:
-        i = args.index("--front")
-        front = int(args[i + 1])
-        del args[i : i + 2]
     rows_out = "--rows-out" in args
     if rows_out:
         args.remove("--rows-out")
@@ -240,19 +196,7 @@ def main() -> int:
     if unknown:
         print(f"unknown query names: {sorted(unknown)}", file=sys.stderr)
         return 2
-    # --front slices the FULL queries() order first (the driver's gate window
-    # is positions 0..N-1 of that order), THEN the name filter intersects —
-    # so `--front N q1 q2` asks "is q1/q2 inside the gate window", not
-    # "take the front of the filtered subset".
-    if front is not None:
-        qs = {k: qs[k] for k in list(qs)[:front]}
     if only:
-        missed = only - set(qs)
-        if missed:
-            print(
-                f"note: outside --front window, skipped: {sorted(missed)}",
-                file=sys.stderr,
-            )
         qs = {k: v for k, v in qs.items() if k in only}
     if slowest_first or shard:
         secs = _recorded_secs(os.path.basename(os.path.normpath(sf_dir)))
@@ -289,7 +233,6 @@ def main() -> int:
     failures = []
     spark_rows: dict[str, int] = {}
     sweep: dict[str, dict] = {}  # CORRECTNESS row schema, for --sweep-out
-    modinfo = _module_info() if sweep_out else {}
     for name, fn in qs.items():
         t0 = time.perf_counter()
         rec = {
@@ -300,13 +243,6 @@ def main() -> int:
             "oracle_rows": None,
             "err": None,
         }
-        if sweep_out:
-            # run-time provenance (r12 ADVICE): the blob of the module
-            # bytes THIS process imported — stamp_ledger certifies these,
-            # never whatever is committed alongside the artifact later
-            rel, blob = modinfo.get(name, ("", None))
-            rec["module"] = rel
-            rec["module_blob"] = blob
         sweep[name] = rec
         try:
             sdf = fn(spark, sf_dir)
@@ -388,11 +324,9 @@ def main() -> int:
     if sweep_out:
         import json
 
-        # scope record (r12 ADVICE): a partial run (--front, named queries,
-        # --shard) must be DISTINGUISHABLE from a full-registry sweep —
-        # stamp_ledger only accepts full_registry=true artifacts as
-        # re-certification evidence. No hash_match key, so the ledger's
-        # hard-stamp scan never mistakes it for a query row.
+        # scope record: a partial run (named queries, --shard) must be
+        # distinguishable from a full-registry sweep. No hash_match key, so
+        # a scan over query rows never mistakes it for one.
         meta = {
             "full_registry": full_registry,
             "n_registry": len(registry_names),
